@@ -8,8 +8,9 @@ execution re-expressed as DataFrame plans:
   date-partitioned parquet fact table (E1)
 - ``get_data`` -> filter+project+sort plan over raw or rollup tables,
   partition pruning replacing the ObjectId-range trick (E2)
-- ``downsample_streams`` -> one incremental groupBy-agg job per
-  granularity pair using merge forms, per-stream watermarks (E3)
+- ``downsample_streams`` -> one incremental ladder pass per stream
+  group: the new slice is read once and every level is merged from the
+  level below in memory, per-stream watermarks (E3)
 - derived streams -> window/union-agg recompute jobs over the
   dependency DAG (W1-W6)
 
@@ -21,6 +22,8 @@ lives in grouping keys and window partitions.
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
+import functools
 import json
 from typing import Any, Iterable, Iterator
 
@@ -36,6 +39,7 @@ from .exceptions import (
     InvalidTimestamp,
     UnsupportedDeriveOperator,
 )
+from .functions import free_local_checkpoint
 from .granularity import (
     GRANULARITIES,
     Granularity,
@@ -49,6 +53,8 @@ from .registry import StreamDescriptor, StreamRegistry
 from .sources.tables import TableStore
 
 _FUTURE_TOLERANCE_S = 600  # reference rejects far-future appends [MED]
+#: watermark of a ladder level never downsampled: below every bucket
+_NO_WATERMARK = -(2**62)
 
 
 def _to_utc_naive(ts: _dt.datetime | None) -> _dt.datetime:
@@ -61,6 +67,11 @@ def _to_utc_naive(ts: _dt.datetime | None) -> _dt.datetime:
 
 def _us(ts: _dt.datetime) -> int:
     return int(ts.replace(tzinfo=_dt.timezone.utc).timestamp() * 1_000_000)
+
+
+def _day_floor(epoch_s: int) -> int:
+    """Start of the UTC day holding ``epoch_s``; keeps ``_NO_WATERMARK``."""
+    return epoch_s if epoch_s == _NO_WATERMARK else epoch_s - epoch_s % 86_400
 
 
 def _date_str(epoch_s: int) -> str:
@@ -397,14 +408,12 @@ class Datastream:
             "t_count": 1,
             "t_first": ts,
             "t_last": ts,
-            "t_sum_micros": _us(ts),
+            "t_sum_micros": decimal.Decimal(_us(ts)),
         }
         self._preagg_buffer.setdefault(g.name, []).append(row)
         d.preaggregated = True
 
     def _coerce_value(self, d: StreamDescriptor, value: Any) -> dict:
-        import decimal
-
         if d.value_type == "numeric":
             if value is None:
                 return {"value": None, "value_dec": None, "value_json": None}
@@ -455,58 +464,11 @@ class Datastream:
         self._buffer.extend(rows)
         self.flush()
 
-    def _append_validation_frame(self) -> DataFrame:
-        """Registry (stream_id, latest_us, is_derived) as a broadcast
-        frame for bulk-append validation, cached per registry version:
-        rebuilding it from ``registry.all()`` serialized every
-        descriptor through the driver ON EVERY BATCH — O(n_streams)
-        driver work that the cache reduces to a dict lookup while the
-        registry is unchanged. (At millions of streams, swap the
-        JSON-lines registry for ``registry_table.ScalableStreamRegistry``,
-        whose ``append_validation_frame()`` reads the same three columns
-        straight from a parquet snapshot — no driver serialization at
-        any batch.)"""
-        sig = self.registry._sig
-        cached = getattr(self, "_append_reg_cache", None)
-        if cached is not None and cached[0] == sig:
-            return cached[1]
-        reg = self.spark.createDataFrame(
-            [
-                (d.stream_id, d.latest_us, bool(d.derive_op))
-                for d in self.registry.all()
-            ],
-            "stream_id string, latest_us long, is_derived boolean",
-        )
-        self._append_reg_cache = (sig, reg)
-        return reg
-
     def append_dataframe(self, df: DataFrame, check_timestamp: bool = True) -> None:
         """Ingest a prepared DataFrame(stream_id, ts, value) — the bulk
-        path for real pipelines; validation is one broadcast join."""
-        reg = self._append_validation_frame()
-        joined = df.join(F.broadcast(reg), "stream_id", "left")
-        bad_derived = joined.where(F.col("is_derived")).limit(1).count()
-        if bad_derived:
-            raise AppendToDerivedStreamNotAllowed("batch contains derived targets")
-        if check_timestamp:
-            viol = (
-                joined.where(
-                    F.col("latest_us").isNotNull()
-                    & (F.unix_micros(F.col("ts")) < F.col("latest_us"))
-                )
-                .limit(1)
-                .count()
-            )
-            if viol:
-                raise InvalidTimestamp("non-monotonic rows in batch")
-        out = df.select(
-            "stream_id",
-            "ts",
-            F.col("value").cast("double").alias("value"),
-            F.col("value").cast("decimal(38,9)").alias("value_dec"),
-            F.lit(None).cast("string").alias("value_json"),
-        )
-        self.store.append_raw(out)
+        path for real pipelines. Validation is one pass over the batch:
+        the per-stream (min, max) timestamps, collected and checked
+        against the registry before anything is written."""
         stats = (
             df.groupBy("stream_id")
             .agg(
@@ -515,8 +477,24 @@ class Datastream:
             )
             .collect()
         )
-        for r in stats:
-            d = self.registry.get(r["stream_id"])
+        if not stats:
+            return
+        descs = [(self.registry.get(r["stream_id"]), r) for r in stats]
+        if any(d.derive_op for d, _r in descs):
+            raise AppendToDerivedStreamNotAllowed("batch contains derived targets")
+        if check_timestamp and any(
+            d.latest_us is not None and r["lo"] < d.latest_us for d, r in descs
+        ):
+            raise InvalidTimestamp("non-monotonic rows in batch")
+        out = df.select(
+            "stream_id",
+            "ts",
+            F.col("value").cast("double").alias("value"),
+            F.col("value").cast("decimal(38,9)").alias("value_dec"),
+            F.lit(None).cast("string").alias("value_json"),
+        )
+        self.store.append_raw(out)
+        for d, r in descs:
             d.latest_us = max(d.latest_us or 0, r["hi"])
             d.earliest_us = min(d.earliest_us or r["lo"], r["lo"])
         self.registry.save()
@@ -954,7 +932,7 @@ class Datastream:
                     continue
                 need_until = (hi // lv.seconds) * lv.seconds
                 wm_ok = all(
-                    d.downsampled_until.get(lv.name, -(2**62)) >= need_until
+                    d.downsampled_until.get(lv.name, _NO_WATERMARK) >= need_until
                     for d in descs
                 )
                 # preaggregated appends land in rollup_<g> directly, so
@@ -986,7 +964,9 @@ class Datastream:
                         one.alias("t_count"),
                         F.col("ts").alias("t_first"),
                         F.col("ts").alias("t_last"),
-                        F.unix_micros("ts").alias("t_sum_micros"),
+                        F.unix_micros("ts")
+                        .cast(rollup_ops.T_SUM_TYPE)
+                        .alias("t_sum_micros"),
                     )
             if not levels:
                 continue
@@ -1061,7 +1041,8 @@ class Datastream:
             [],
             "stream_id string, v_count long, v_sum double, v_min double, "
             "v_max double, v_sum_squares double, t_count long, "
-            "t_first timestamp, t_last timestamp, t_sum_micros long, "
+            "t_first timestamp, t_last timestamp, "
+            f"t_sum_micros {rollup_ops.T_SUM_TYPE}, "
             "v_mean double, v_std_dev double, t_mean timestamp",
         )
 
@@ -1253,115 +1234,130 @@ class Datastream:
     ) -> None:
         """Incrementally materialize the ladder for matched streams.
 
-        One set-oriented job per granularity pair: filter the finer
-        level to [per-stream watermark, floor(until)), aggregate with
-        merge forms, append, advance watermarks. Only complete buckets
-        (< floor(until, coarser)) are ever written (§2.9)."""
+        One pass per (stored level, pre-aggregated) stream group: the
+        source — raw datapoints, or the stored level's rollup table for
+        pre-aggregated streams — is read once and sliced to
+        [per-stream recompute day, floor(until)). The slice is
+        aggregated to the first coarser level, and every later level is
+        merged from the materialized level below it; no level is read
+        back from disk. Each level is cut at its own floor(until), so only
+        complete buckets are ever written (§2.9), and is written before
+        its watermarks advance."""
         self.flush()
         matched = self.registry.find(query_tags)
         if not matched:
             return
-        until_us = _us(_to_utc_naive(until))
+        until_s = _us(_to_utc_naive(until)) // 1_000_000
 
         by_granularity: dict[tuple[str, bool], list[StreamDescriptor]] = {}
         for d in matched:
             key = (d.highest_granularity, d.preaggregated)
             by_granularity.setdefault(key, []).append(d)
 
+        read_raw = functools.cache(self._raw_df)  # shared by raw groups
         for (start_name, preagg), descs in by_granularity.items():
-            start_g = granularity_by_name(start_name)
-            finer = start_g
-            while (coarser := next_coarser(finer)) is not None:
-                self._downsample_step(
-                    descs, finer, coarser, start_g, until_us, preagg
-                )
-                finer = coarser
+            self._downsample_ladder(
+                descs, granularity_by_name(start_name), until_s, preagg, read_raw
+            )
         self.registry.save()
 
-    def _downsample_step(
+    def _downsample_ladder(
         self,
         descs: list[StreamDescriptor],
-        finer: Granularity,
-        coarser: Granularity,
         start_g: Granularity,
-        until_us: int,
-        preagg: bool = False,
+        until_s: int,
+        preagg: bool,
+        read_raw,
     ) -> None:
-        cutoff = (until_us // 1_000_000 // coarser.seconds) * coarser.seconds
-        work = [
-            (d.stream_id, d.downsampled_until.get(coarser.name, -(2**62)))
-            for d in descs
-        ]
-        work = [(sid, wm) for sid, wm in work if wm < cutoff]
+        levels: list[tuple[Granularity, int]] = []
+        g = start_g
+        while (g := next_coarser(g)) is not None:
+            levels.append((g, (until_s // g.seconds) * g.seconds))
+        # per level, the streams whose watermark is behind its cutoff
+        behind = {
+            lv.name: {
+                d.stream_id
+                for d in descs
+                if d.downsampled_until.get(lv.name, _NO_WATERMARK) < cutoff
+            }
+            for lv, cutoff in levels
+        }
+        # Recompute each stream from the UTC day containing its earliest
+        # lagging watermark (not the watermark itself): the writes
+        # replace whole (stream, date) partitions, so every partition
+        # they touch must be regenerated in full — and re-aggregating a
+        # day is what makes the ladder idempotent under crash-retry
+        # (see TableStore.overwrite_rollup). Levels that were already
+        # ahead simply redo the same days.
+        work = []
+        for d in descs:
+            lagging = [
+                d.downsampled_until.get(lv.name, _NO_WATERMARK)
+                for lv, _cutoff in levels
+                if d.stream_id in behind[lv.name]
+            ]
+            if lagging:
+                work.append((d.stream_id, _day_floor(min(lagging))))
         if not work:
             return
-        # Recompute from the UTC day containing each stream's watermark
-        # (not the watermark itself): the write below replaces whole
-        # (stream, date) partitions, so every partition it touches must
-        # be regenerated in full — and re-aggregating a day is what
-        # makes the cascade idempotent under crash-retry (see
-        # TableStore.overwrite_rollup).
-        work = [
-            (sid, wm, max(wm - wm % 86_400, -(2**62)) if wm > -(2**61) else wm)
-            for sid, wm in work
-        ]
-        wm_df = F.broadcast(
-            self.spark.createDataFrame(
-                work, "stream_id string, wm long, wm_day long"
-            )
+        src = (
+            self.store.read(f"rollup_{start_g.name}") if preagg else read_raw()
         )
-        # Partition pruning for the incremental slice: the per-stream
-        # watermark join can't prune the scan, but the GLOBAL bounds
-        # [min(wm), cutoff] can — emitted as literal p_date predicates
-        # so each incremental job reads only the new date partitions.
-        global_lo = min(wm_day for _, _wm, wm_day in work)
-
-        def prune_dates(df):
-            if "p_date" not in df.columns:
-                return df
-            if global_lo > -(2**61):
-                df = df.where(F.col("p_date") >= _date_str(global_lo))
-            return df.where(F.col("p_date") <= _date_str(cutoff))
-
-        if finer == start_g and not preagg:
-            src = self._raw_df()
-            if src is None:
-                return
-            sliced = (
-                prune_dates(src)
-                .join(wm_df, "stream_id")
-                .withColumn("_b", bucket_epoch(F.col("ts"), coarser.seconds))
-                .where((F.col("_b") >= F.col("wm_day")) & (F.col("_b") < cutoff))
-            )
-            out = sliced.groupBy("stream_id", F.col("_b").alias("bucket_epoch")).agg(
-                *rollup_ops.raw_rollup_aggs()
-            )
+        if src is None:
+            return
+        first, first_cutoff = levels[0]
+        if "p_date" in src.columns:
+            # the per-stream join below can't prune the scan; the
+            # global bounds, as literal p_date predicates, can
+            global_lo = min(day0 for _sid, day0 in work)
+            if global_lo != _NO_WATERMARK:
+                src = src.where(F.col("p_date") >= _date_str(global_lo))
+            src = src.where(F.col("p_date") <= _date_str(first_cutoff))
+        day0_df = F.broadcast(
+            self.spark.createDataFrame(work, "stream_id string, day0 long")
+        )
+        if preagg:
+            b, to_first = F.col("bucket_epoch"), rollup_ops.rollup_cascade
         else:
-            src = self.store.read(f"rollup_{finer.name}")
-            if src is None:
-                return
-            sliced = (
-                prune_dates(src)
-                .join(wm_df, "stream_id")
-                .withColumn(
-                    "_b",
-                    (F.floor(F.col("bucket_epoch") / coarser.seconds) * coarser.seconds).cast(
-                        "bigint"
-                    ),
-                )
-                .where((F.col("_b") >= F.col("wm_day")) & (F.col("_b") < cutoff))
-            )
-            out = sliced.groupBy("stream_id", F.col("_b").alias("bucket_epoch")).agg(
-                *rollup_ops.merge_rollup_aggs()
-            )
-        out = rollup_ops.finish_columns(out).withColumn(
-            "t_mean", F.col("t_mean")
+            b = bucket_epoch(F.col("ts"), first.seconds)
+            to_first = rollup_ops.rollup_from_raw
+        level = to_first(
+            src.join(day0_df, "stream_id").where(
+                (b >= F.col("day0")) & (b < first_cutoff)
+            ),
+            first,
         )
-        # data before watermark, idempotent overwrite — crash-retry
-        # rewrites the same partitions instead of appending duplicates
-        self.store.overwrite_rollup(out, coarser.name)
-        for d in descs:
-            d.downsampled_until[coarser.name] = cutoff
+
+        finer = None
+        try:
+            for lv, cutoff in levels:
+                if finer is not None:
+                    level = rollup_ops.rollup_cascade(
+                        finer.where(F.col("bucket_epoch") < cutoff), lv
+                    )
+                # materialized once, in as many partitions as adaptive
+                # execution picks for it: the write and the next level
+                # both read these blocks, never the level's files
+                level = level.localCheckpoint(eager=True)
+                if finer is not None:
+                    free_local_checkpoint(finer)
+                finer = level
+                ids = behind[lv.name]
+                if not ids:
+                    continue  # already complete; only feeds coarser levels
+                out = level
+                if len(ids) < len(work):
+                    out = level.where(F.col("stream_id").isin(sorted(ids)))
+                # data before watermark, idempotent overwrite — crash-
+                # retry rewrites the same partitions instead of
+                # appending duplicates
+                self.store.overwrite_rollup(out, lv.name)
+                for d in descs:
+                    if d.stream_id in ids:
+                        d.downsampled_until[lv.name] = cutoff
+        finally:
+            if finer is not None:
+                free_local_checkpoint(finer)
 
     # ------------------------------------------------------------------
     # W1-W6: derived streams
@@ -1774,7 +1770,7 @@ def _preagg_schema():
             T.StructField("t_count", T.LongType(), True),
             T.StructField("t_first", T.TimestampType(), True),
             T.StructField("t_last", T.TimestampType(), True),
-            T.StructField("t_sum_micros", T.LongType(), True),
+            T.StructField("t_sum_micros", T.DecimalType(38, 0), True),
         ]
     )
 

@@ -15,8 +15,10 @@ exactly; mean and std_dev are finish-time derivations.
 Scale notes (100 TB posture):
 - Partial (map-side) aggregation applies automatically to all of these
   — the shuffle carries one row per (stream_id, bucket), not raw rows.
-- The cascade rolls level g -> g+1 from the g rollup (6x-86400x smaller
-  than raw), so only the first level ever scans the fact table.
+- ``Datastream.downsample_streams`` reads the new slice of the fact
+  table once, aggregates it to the first ladder level, and merges every
+  later level from the cached level below (6x-86400x smaller than raw);
+  no level is read back from disk to build the next.
 - No Python UDFs anywhere: everything is JVM-side, whole-stage codegen.
 """
 
@@ -105,6 +107,24 @@ def expand_downsamplers(names: list[str]) -> list[str]:
     return ordered
 
 
+#: Storage type of ``t_sum_micros``: a long holds the µs sum of only
+#: ~5,000 present-day timestamps.
+T_SUM_TYPE = "decimal(38,0)"
+
+
+def time_sum_micros(ts: Column) -> Column:
+    """Exact µs sum of ``ts`` as ``T_SUM_TYPE``. Each row's µs are split
+    into their high and low 32-bit halves, which are summed as longs
+    (exact up to 2**31 rows per group) and recombined once per group, so
+    the per-row work stays long arithmetic. Needs no bucket start, so it
+    serves any grouping: ladder buckets and streaming tumbling, sliding
+    and session windows alike."""
+    us = F.unix_micros(ts)
+    hi = F.sum(F.shiftright(us, 32)).cast(T_SUM_TYPE)
+    lo = F.sum(us.bitwiseAND(F.lit(0xFFFFFFFF))).cast(T_SUM_TYPE)
+    return (hi * F.lit(2**32) + lo).cast(T_SUM_TYPE)
+
+
 def raw_rollup_aggs(value: str = "value", ts: str = "ts") -> list[Column]:
     """Aggregate expressions raw -> first rollup level (A1-A10).
 
@@ -125,7 +145,7 @@ def raw_rollup_aggs(value: str = "value", ts: str = "ts") -> list[Column]:
         F.min(t).alias("t_first"),
         F.max(t).alias("t_last"),
         # time-mean kept as exact integer-µs sum + count; finished lazily
-        F.sum(F.unix_micros(t)).alias("t_sum_micros"),
+        time_sum_micros(t).alias("t_sum_micros"),
     ] + [
         ds.raw(v, t).alias(f"v_{ds.name}")
         for ds in CUSTOM_DOWNSAMPLERS.values()
@@ -143,7 +163,7 @@ def merge_rollup_aggs() -> list[Column]:
         F.sum("t_count").alias("t_count"),
         F.min("t_first").alias("t_first"),
         F.max("t_last").alias("t_last"),
-        F.sum("t_sum_micros").alias("t_sum_micros"),
+        F.sum(F.col("t_sum_micros").cast(T_SUM_TYPE)).alias("t_sum_micros"),
     ] + [
         ds.merge(F.col(f"v_{ds.name}")).alias(f"v_{ds.name}")
         for ds in CUSTOM_DOWNSAMPLERS.values()
@@ -167,9 +187,8 @@ def finish_columns(df: DataFrame) -> DataFrame:
         .withColumn("v_std_dev", F.sqrt(var))
         .withColumn(
             "t_mean",
-            F.timestamp_micros(
-                (F.col("t_sum_micros") / F.col("t_count")).cast("bigint")
-            ),
+            # integral division: exact on the decimal time-sum
+            F.timestamp_micros(F.expr("t_sum_micros div t_count")),
         )
     )
     for ds in CUSTOM_DOWNSAMPLERS.values():

@@ -54,8 +54,11 @@ def purge_deleted_streams(store: TableStore, live_stream_ids: list[str],
         dead = df.join(F.broadcast(live), "stream_id", "left_anti")
         if dead.isEmpty():
             continue
+        # the partition is rewritten anyway: write it compacted, or it
+        # comes out as one file per join partition, below the
+        # compaction threshold and never merged
         kept = df.join(F.broadcast(live), "stream_id", "left_semi")
-        _swap_partition(kept, ppath)
+        _swap_partition(kept.coalesce(COMPACT_TARGET_FILES), ppath)
         rewritten += 1
     return rewritten
 

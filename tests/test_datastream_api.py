@@ -1223,3 +1223,197 @@ def test_validate_api_surface(ds):
         end=T0 + dt.timedelta(seconds=4),
     ).collect()[0]
     assert (win.violations, win.total, win.passed) == (0, 5, True)
+
+
+def _batch_df(spark, rows):
+    """A prepared ``append_dataframe`` batch from (stream_id, ts, value)."""
+    return spark.createDataFrame(rows, "stream_id string, ts timestamp, value double")
+
+
+def test_append_dataframe_rejections_write_nothing(ds, spark, store_root):
+    import os
+
+    src = _mk_stream(ds, "src")
+    derived = ds.ensure_stream(
+        {"name": "twice"}, derive_from=[src], derive_op="sum"
+    )
+    ds.append(src, 1.0, T0 + dt.timedelta(seconds=10))
+    ds.flush()
+
+    def raw_rows():
+        return spark.read.parquet(os.path.join(store_root, "datapoints")).count()
+
+    before = raw_rows()
+    with pytest.raises(exc.AppendToDerivedStreamNotAllowed):
+        ds.append_dataframe(
+            _batch_df(
+                spark,
+                [
+                    (src, T0 + dt.timedelta(seconds=20), 2.0),
+                    (derived, T0 + dt.timedelta(seconds=20), 2.0),
+                ],
+            )
+        )
+    with pytest.raises(exc.InvalidTimestamp):
+        ds.append_dataframe(
+            _batch_df(
+                spark,
+                [
+                    (src, T0 + dt.timedelta(seconds=30), 3.0),
+                    (src, T0 + dt.timedelta(seconds=5), 0.5),  # < latest
+                ],
+            )
+        )
+    assert raw_rows() == before
+    assert ds.registry.get(src).latest_us == _epoch_us(T0 + dt.timedelta(seconds=10))
+    # the monotonic check can be switched off; the derived one cannot
+    ds.append_dataframe(
+        _batch_df(spark, [(src, T0 + dt.timedelta(seconds=5), 0.5)]),
+        check_timestamp=False,
+    )
+    assert raw_rows() == before + 1
+
+
+def test_append_dataframe_advances_stream_bounds(ds, spark):
+    a = _mk_stream(ds, "a")
+    b = _mk_stream(ds, "b")
+    ds.append_dataframe(
+        _batch_df(
+            spark,
+            [(a, T0 + dt.timedelta(seconds=s), float(s)) for s in (3, 1, 2)]
+            + [(b, T0 + dt.timedelta(seconds=7), 7.0)],
+        )
+    )
+    da, db = ds.registry.get(a), ds.registry.get(b)
+    assert (da.earliest_us, da.latest_us) == (
+        _epoch_us(T0 + dt.timedelta(seconds=1)),
+        _epoch_us(T0 + dt.timedelta(seconds=3)),
+    )
+    assert db.earliest_us == db.latest_us == _epoch_us(T0 + dt.timedelta(seconds=7))
+    ds.append_dataframe(_batch_df(spark, [(a, T0 + dt.timedelta(seconds=9), 9.0)]))
+    assert ds.registry.get(a).earliest_us == _epoch_us(T0 + dt.timedelta(seconds=1))
+    assert ds.registry.get(a).latest_us == _epoch_us(T0 + dt.timedelta(seconds=9))
+    assert [p["v"] for p in ds.get_data(a, Granularity.Seconds)] == [1.0, 2.0, 3.0, 9.0]
+
+
+def _epoch_us(t: dt.datetime) -> int:
+    return int(t.replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
+
+
+_LADDER = ["10seconds", "minutes", "10minutes", "hours", "6hours", "days"]
+
+
+def _ladder_snapshot(ds):
+    """Every stored bucket of every ladder level, keyed by stream name."""
+    names = {d["stream_id"]: d["tags"]["name"] for d in ds.find_streams()}
+    snap = {}
+    for level in _LADDER:
+        df = ds.store.read(f"rollup_{level}")
+        snap[level] = sorted(
+            (
+                names[r["stream_id"]], r["bucket_epoch"], r["v_count"], r["v_sum"],
+                r["v_min"], r["v_max"], r["t_count"], r["t_first"], r["t_last"],
+                r["t_sum_micros"],
+            )
+            for r in df.collect()
+        )
+    return snap
+
+
+def _ladder_store(spark, root):
+    """Two raw streams and a pre-aggregated minutes stream over three
+    days; day one is appended and downsampled. Returns the engine and an
+    ``append_day(ds, n)`` that appends the raw points of day ``n``."""
+    ds = Datastream(spark, root)
+    rows = []
+    for name, step in (("fast", 600), ("slow", 1800)):
+        sid = _mk_stream(ds, name)
+        rows += [
+            {"stream_id": sid, "value": float(i % 7), "timestamp": T0 + dt.timedelta(seconds=i * step)}
+            for i in range(3 * 86_400 // step)
+        ]
+    pre = ds.ensure_stream({"name": "pre"}, highest_granularity="minutes")
+    for h in range(72):
+        ds.append(pre, {"count": 2, "sum": float(h), "min": 0.0, "max": float(h)},
+                  T0 + dt.timedelta(hours=h))
+
+    def append_day(ds, n):
+        lo, hi = T0 + dt.timedelta(days=n), T0 + dt.timedelta(days=n + 1)
+        ds.append_multiple([r for r in rows if lo <= r["timestamp"] < hi])
+
+    append_day(ds, 0)
+    ds.downsample_streams(until=T0 + dt.timedelta(days=1))
+    append_day(ds, 1)
+    return ds, append_day
+
+
+def test_downsample_lagging_levels_retry_matches_clean_run(spark, tmp_path, monkeypatch):
+    """A crash after the first three levels' data and watermarks were
+    saved, but before the rest: the next call redoes the lagging levels
+    from the day of their watermark and ends bucket-for-bucket equal to
+    a clean run, with no duplicates. One call reads each source table
+    once and never reads a level it builds."""
+    from datastream_spark.sources.tables import TableStore
+
+    def day(n):
+        return T0 + dt.timedelta(days=n)
+
+    clean, append_day = _ladder_store(spark, str(tmp_path / "clean"))
+    clean.downsample_streams(until=day(2))
+    append_day(clean, 2)
+    reads = []
+    real_read = TableStore.read
+    monkeypatch.setattr(
+        TableStore, "read", lambda self, t: reads.append(t) or real_read(self, t)
+    )
+    clean.downsample_streams(until=day(3))
+    monkeypatch.setattr(TableStore, "read", real_read)
+    assert sorted(reads) == ["datapoints", "datapoints_derived", "rollup_minutes"]
+    want = _ladder_snapshot(clean)
+    assert all(want[level] for level in _LADDER)
+
+    root = str(tmp_path / "crashy")
+    crashy, append_day = _ladder_store(spark, root)
+    real_write = TableStore.overwrite_rollup
+
+    def crash_at_fourth_level(self, df, level):
+        if level == "hours":
+            raise RuntimeError("simulated crash")
+        real_write(self, df, level)
+
+    monkeypatch.setattr(TableStore, "overwrite_rollup", crash_at_fourth_level)
+    with pytest.raises(RuntimeError):
+        crashy.downsample_streams(until=day(2))
+    monkeypatch.setattr(TableStore, "overwrite_rollup", real_write)
+    crashy.registry.save()  # the first three levels' watermarks persist
+
+    retry = Datastream(spark, root)
+    fast = retry.registry.get(retry.find_streams({"name": "fast"})[0]["stream_id"])
+    epoch = int(day(0).replace(tzinfo=dt.timezone.utc).timestamp())
+    assert fast.downsampled_until["10minutes"] == epoch + 2 * 86_400
+    assert fast.downsampled_until["hours"] == epoch + 86_400
+    append_day(retry, 2)
+    retry.downsample_streams(until=day(3))
+    got = _ladder_snapshot(retry)
+    for level in _LADDER:
+        assert got[level] == want[level], level
+        assert len({r[:2] for r in got[level]}) == len(got[level]), level
+
+
+def test_downsample_time_mean_past_the_long_range(ds):
+    """A day bucket of 6,000 present-day points: the µs time-sum is past
+    the long range, and the time mean is still exact."""
+    sid = _mk_stream(ds, "dense")
+    day = dt.datetime(2026, 1, 1)
+    stamps = [day + dt.timedelta(seconds=10 * i) for i in range(6_000)]
+    ds.append_multiple(
+        [{"stream_id": sid, "value": 1.0, "timestamp": t} for t in stamps]
+    )
+    ds.downsample_streams(until=day + dt.timedelta(days=1))
+    (bucket,) = list(ds.get_data(sid, Granularity.Days))
+    total = sum(_epoch_us(t) for t in stamps)
+    assert total > 2**63
+    assert bucket["v"]["count"] == 6_000
+    want = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=total // 6_000)
+    assert bucket["t"]["mean"] == want
+    assert (bucket["t"]["first"], bucket["t"]["last"]) == (stamps[0], stamps[-1])
